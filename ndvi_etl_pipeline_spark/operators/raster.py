@@ -1122,7 +1122,6 @@ def scan_geotiffs(
     path_glob: str,
     tile: int = DEFAULT_TILE,
     nodata_to_nan: bool = True,
-    use_arrow: bool = True,
     overview_level: int = 0,
     on_error: str = "raise",
 ) -> DataFrame:
@@ -1134,11 +1133,10 @@ def scan_geotiffs(
     from files ≫ cores, which is the 100 TB shape (thousands of
     scenes × 2 bands).
 
-    Default path is `mapInArrow`: the file payload crosses the
+    Decode runs in `mapInArrow`: the file payload crosses the
     JVM→Python boundary as an Arrow buffer and is decoded through a
     zero-copy memoryview — no per-cell Python bytes materialization,
-    no pandas block manager on either side of the kernel. The
-    `use_arrow=False` pandas path is kept for parity testing.
+    no pandas block manager on either side of the kernel.
 
     ``overview_level > 0`` reads that reduced-resolution IFD from the
     file's pyramid instead of the full band (clamped to the deepest
@@ -1154,53 +1152,34 @@ def scan_geotiffs(
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
     binf = spark.read.format("binaryFile").load(path_glob).select("path", "content")
 
-    if use_arrow:
-        def decode_arrow(batches):
-            import pyarrow as pa
+    def decode_arrow(batches):
+        import pyarrow as pa
 
-            schema = _tile_arrow_schema()
-            for batch in batches:
-                paths = batch.column(0).to_pylist()
-                contents = batch.column(1)
-                cols: list[list] = [[] for _ in _TILE_ARROW_NAMES]
-                for i, p in enumerate(paths):
-                    mv = memoryview(contents[i].as_buffer())
-                    try:
-                        rows = list(
-                            _file_tile_rows(p, mv, tile, nodata_to_nan, overview_level)
-                        )
-                    except Exception:
-                        if on_error == "raise":
-                            raise
-                        continue  # quarantined: no tiles from this file
-                    for row in rows:
-                        for acc, v in zip(cols, row):
-                            acc.append(v)
-                if cols[0]:
-                    yield pa.record_batch(
-                        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-                        schema=schema,
-                    )
-
-        return binf.mapInArrow(decode_arrow, schema=TILE_SCHEMA)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
+        schema = _tile_arrow_schema()
+        for batch in batches:
+            paths = batch.column(0).to_pylist()
+            contents = batch.column(1)
+            cols: list[list] = [[] for _ in _TILE_ARROW_NAMES]
+            for i, p in enumerate(paths):
+                mv = memoryview(contents[i].as_buffer())
                 try:
-                    rows.extend(
-                        _file_tile_rows(
-                            r.path, bytes(r.content), tile, nodata_to_nan, overview_level
-                        )
+                    rows = list(
+                        _file_tile_rows(p, mv, tile, nodata_to_nan, overview_level)
                     )
                 except Exception:
                     if on_error == "raise":
                         raise
-            if rows:
-                yield pd.DataFrame(rows, columns=_TILE_ARROW_NAMES)
+                    continue  # quarantined: no tiles from this file
+                for row in rows:
+                    for acc, v in zip(cols, row):
+                        acc.append(v)
+            if cols[0]:
+                yield pa.record_batch(
+                    [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                    schema=schema,
+                )
 
-    return binf.mapInPandas(decode, schema=TILE_SCHEMA)
+    return binf.mapInArrow(decode_arrow, schema=TILE_SCHEMA)
 
 
 def scan_scene_ndvi(
@@ -1362,9 +1341,6 @@ def parse_band_files(binary_df: DataFrame) -> DataFrame:
     return parse_band_names(binary_df, keep=("content",))
 
 
-_NDVI_TILE_NAMES = [f.name for f in NDVI_TILE_SCHEMA]
-
-
 def _ndvi_arrow_schema():
     import pyarrow as pa
 
@@ -1456,7 +1432,6 @@ def scene_ndvi_from_bands(
     red_band: str = "red",
     nir_band: str = "nir",
     on_error: str = "raise",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The fused kernel over an already-parsed (scene_id, band,
     content) relation — shared by the batch glob scan and the
@@ -1468,45 +1443,35 @@ def scene_ndvi_from_bands(
     the job — one bad file cannot kill a 100 TB run. The default
     'raise' is strict (fail fast, the right mode for tests/dev).
 
-    Default path is `applyInArrow`: each scene's band payloads arrive
-    as Arrow buffers read through zero-copy memoryviews, and tile
-    payloads leave as an Arrow batch — pandas never touches the
-    ~100 MB binary cells. `use_arrow=False` keeps the pandas kernel
-    for parity testing."""
+    The kernel runs in `applyInArrow`: each scene's band payloads
+    arrive as Arrow buffers read through zero-copy memoryviews, and
+    tile payloads leave as an Arrow batch — pandas never touches the
+    ~100 MB binary cells."""
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
 
-    if use_arrow:
-        def kernel_arrow(key, table):
-            import pyarrow as pa
+    def kernel_arrow(key, table):
+        import pyarrow as pa
 
-            scene_id = key[0].as_py() if hasattr(key[0], "as_py") else key[0]
-            bands = table.column("band").to_pylist()
-            contents = table.column("content")
-            by_band = {
-                b: memoryview(contents[i].as_buffer()) for i, b in enumerate(bands)
-            }
-            rows = _scene_ndvi_rows(
-                scene_id, by_band, tile, red_band, nir_band, on_error
-            )
-            schema = _ndvi_arrow_schema()
-            cols = list(zip(*rows)) if rows else [[] for _ in schema]
-            return pa.table(
-                [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
-                schema=schema,
-            )
-
-        return parsed.groupBy("scene_id").applyInArrow(
-            kernel_arrow, schema=NDVI_TILE_SCHEMA
+        scene_id = key[0].as_py() if hasattr(key[0], "as_py") else key[0]
+        bands = table.column("band").to_pylist()
+        contents = table.column("content")
+        by_band = {
+            b: memoryview(contents[i].as_buffer()) for i, b in enumerate(bands)
+        }
+        rows = _scene_ndvi_rows(
+            scene_id, by_band, tile, red_band, nir_band, on_error
+        )
+        schema = _ndvi_arrow_schema()
+        cols = list(zip(*rows)) if rows else [[] for _ in schema]
+        return pa.table(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
+            schema=schema,
         )
 
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (scene_id,) = key
-        by_band = {b: bytes(c) for b, c in zip(pdf["band"], pdf["content"])}
-        rows = _scene_ndvi_rows(scene_id, by_band, tile, red_band, nir_band, on_error)
-        return pd.DataFrame(rows, columns=_NDVI_TILE_NAMES)
-
-    return parsed.groupBy("scene_id").applyInPandas(kernel, schema=NDVI_TILE_SCHEMA)
+    return parsed.groupBy("scene_id").applyInArrow(
+        kernel_arrow, schema=NDVI_TILE_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------

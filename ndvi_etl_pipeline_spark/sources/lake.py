@@ -542,8 +542,8 @@ def _rec_sig(path: str, version: int):
     return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
-def _cache_put(cache: dict, key, val) -> None:
-    if len(cache) >= _SNAP_CACHE_MAX:
+def _cache_put(cache: dict, key, val, cap: int = _SNAP_CACHE_MAX) -> None:
+    if len(cache) >= cap:
         cache.pop(next(iter(cache)))
     cache[key] = val
 
@@ -1101,73 +1101,100 @@ def _write_data_files(
 #: not use them (asserted at dv-delete time).
 _DV_FILE, _DV_POS = "__dv_file", "__dv_pos"
 _DV_SCHEMA = f"{_DV_FILE} string, {_DV_POS} bigint"
-_DV_H = "__dv_h"
 _DV_K = "__dv_k"
-
-#: DV anti-join keying: 'auto' (default) packs (file, ordinal) into a
-#: SINGLE exact 64-bit key when verifiable (see _dv_pack_base — a
-#: one-long-key BroadcastHashJoin probes Spark's LongHashedRelation
-#: fast path, measured ~10x faster per row than the two-long-key
-#: UnsafeHashedRelation probe); 'hash2' forces the unpacked
-#: (hash, ordinal) two-column keying; 'decoded' forces the legacy
-#: decoded-string keying. Benchmarking and parity tests flip this.
-DV_KEYING_CONF = "spark.ndvi_etl.dvKeying"
-_DV_KEYING_MODES = ("auto", "hash2", "decoded")
-
-
-def _dv_keying(spark: SparkSession) -> str:
-    """Validated DV_KEYING_CONF value. A typo ('hash', 'packed', ...)
-    must ERROR, not silently select some mode — parity/bench runs that
-    believe they forced a keying would otherwise measure the wrong
-    plan."""
-    v = spark.conf.get(DV_KEYING_CONF, "auto")
-    if v not in _DV_KEYING_MODES:
-        raise ValueError(
-            f"{DV_KEYING_CONF}={v!r}: expected one of {_DV_KEYING_MODES}"
-        )
-    return v
+_DV_FID = "__dv_fid"
 
 #: Characters a Hadoop/Spark file URI reports verbatim (never
 #: percent-encoded): URI unreserved chars plus '/' and the '='
 #: sub-delimiter hive partition dirs use. A path outside this set
 #: may be encoded differently executor-side than the driver predicts,
-#: so hash keying refuses it and the read falls back to the decoded
-#: string path.
+#: so packing refuses it and the read takes the file-id keying.
 _DV_SAFE_PATH = re.compile(r"^[A-Za-z0-9/._=~-]+$")
-_DV_URI_PREFIX: dict[str, str | None] = {}
-_DV_HASH_OK: dict[tuple, bool] = {}
+#: Every cache below holds successes (and the deterministic
+#: truncated-hash collision) only: a transient probe or footer-read
+#: failure is retried by the next read instead of disabling packing
+#: for the life of the process.
+_DV_URI_PREFIX: dict[str, str] = {}
+_DV_PACK: dict[tuple, tuple | None] = {}
+#: num_rows per ABSOLUTE file path, from the parquet footer. Files in
+#: a committed snapshot are immutable, so this never invalidates.
+#: Caching per FILE (not per entry subset) means distinct pruned
+#: subsets of one table share the footer walk instead of re-reading
+#: shared files. Bounded FIFO, sized for table-scale file counts.
+_DV_FILE_ROWS: dict[str, int] = {}
+_DV_FILE_ROWS_MAX = 1 << 16
 
 
-def _dv_hash_map(spark: SparkSession, path: str, rels: list[str]):
-    """(entry rel -> xxhash64 of the RAW `_metadata.file_path` string
-    that file will report) mapping DataFrame for hash-keyed DV
-    anti-joins — or None when the fast path cannot be trusted and the
-    read must fall back to the decoded-string keying.
+def _dv_posbits(path: str, rels: list[str]) -> int | None:
+    """Bits needed to hold any row ordinal of any entry file: max over
+    files of bit_length(num_rows - 1), from parquet footer metadata
+    alone (O(#files) driver work, footer reads cached per file). None
+    when a footer is unreadable — packing is then unavailable."""
+    root = os.path.abspath(path)
+    import pyarrow.parquet as pq
 
-    Why: the in-debt DV read's measured dominator at 600 M rows is
-    the per-row url_decode/regexp normalization chain of
-    `_dv_meta_cols` (4.5x a plain scan in tools/bench_dv_micro.py;
-    `xxhash64(_metadata.file_path)` on the raw string is +6%). So the
-    table side hashes the RAW path — no decode, no string join — and
-    the driver predicts each file's raw form as `prefix + abspath`,
+    mx = 1
+    for r in rels:
+        p = r if os.path.isabs(r) else os.path.join(root, r)
+        n = _DV_FILE_ROWS.get(p)
+        if n is None:
+            try:
+                n = pq.ParquetFile(p).metadata.num_rows
+            except Exception:
+                return None
+            _cache_put(_DV_FILE_ROWS, p, n, _DV_FILE_ROWS_MAX)
+        mx = max(mx, n)
+    return max((mx - 1).bit_length(), 1)
+
+
+def _dv_pack(spark: SparkSession, path: str, rels: list[str]):
+    """(posbits, mask, {entry rel -> packed base}) for the SINGLE-long
+    exact DV key, or None when packing cannot be verified and the read
+    must take the file-id keying.
+
+    Why: a BroadcastHashJoin whose key is ONE long probes Spark's
+    LongHashedRelation (primitive open-addressing map); two long keys
+    force the UnsafeHashedRelation path — per probe an UnsafeRow
+    projection plus byte-wise hash/compare — measured ~10x slower per
+    row on a 60 M-row anti-join (OPTIMIZATION_r09.md, re-checked in
+    OPTIMIZATION_r10.md §5). And the table side hashes the RAW
+    `_metadata.file_path` — no per-row url_decode/regexp chain, the
+    measured dominator of the in-debt read. So the (file, ordinal)
+    pair is packed losslessly into one 64-bit key:
+
+        key = (xxhash64(raw file path) & mask) << posbits | ordinal
+
+    The driver predicts each file's raw form as `prefix + abspath`,
     where the constant scheme prefix is PROBED once per table root
-    with a one-row scan (raw must end with the probe file's absolute
-    path; anything else → None). Guards:
+    with a one-row scan. Exactness is VERIFIED, not assumed:
 
     - every entry path must be in `_DV_SAFE_PATH` (chars a file URI
       reports verbatim), so prefix+abspath is exact for ALL files,
       not just the probed one;
-    - the hash map must be collision-free (checked once per entry
-      set with a manifest-scale aggregate; a 64-bit collision would
-      over-delete rows of an unrelated file).
-    """
-    if _dv_keying(spark) == "decoded":
-        return None
+    - the probe's raw path must end with the probe file's absolute
+      path;
+    - every footer must be readable (posbits sizes the ordinal field
+      from footer row counts, `_dv_posbits`) and posbits < 63 must
+      leave hash bits, with mask = (1 << (63 - posbits)) - 1;
+    - the truncated hashes must be pairwise distinct across the
+      COMPLETE entry set — the only file universe a scan or DV can
+      mention — so key equality is equivalent to (file, ordinal)
+      equality (distinct truncated hashes imply distinct full ones).
+
+    Top bit is always 0 (posbits + hashbits = 63), so the packed key
+    is non-negative and overflow-free."""
     root = os.path.abspath(path)
+    # key on the rels tuple ITSELF (not its Python hash): a hash
+    # collision between two rel sets would silently serve the wrong
+    # answer — here over/under-deleting rows
+    key = (root, tuple(rels))
+    if key in _DV_PACK:
+        return _DV_PACK[key]
     abss = [r if os.path.isabs(r) else os.path.join(root, r) for r in rels]
     if not all(_DV_SAFE_PATH.match(a) for a in abss):
         return None
-    if root not in _DV_URI_PREFIX:
+    pref = _DV_URI_PREFIX.get(root)
+    if pref is None:
         probe = abss[0]
         try:
             row = (
@@ -1176,128 +1203,48 @@ def _dv_hash_map(spark: SparkSession, path: str, rels: list[str]):
                 .limit(1)
                 .collect()
             )
-            raw = row[0][0] if row else None
-        except Exception:
-            raw = None
-        _DV_URI_PREFIX[root] = (
-            raw[: len(raw) - len(probe)]
-            if raw and raw.endswith(probe)
-            else None
-        )
-    pref = _DV_URI_PREFIX[root]
-    if pref is None:
-        return None
-    hm = spark.createDataFrame(
-        [(r, pref + a) for r, a in zip(rels, abss)],
-        f"{_DV_FILE} string, __dv_raw string",
-    ).select(_DV_FILE, F.xxhash64("__dv_raw").alias(_DV_H))
-    # key on the rels tuple ITSELF (not its Python hash): a hash
-    # collision between two rel sets would silently serve the wrong
-    # answer — here over/under-deleting rows (round-9 ADVICE)
-    key = (root, tuple(rels))
-    if key not in _DV_HASH_OK:
-        c = hm.agg(
-            F.count(F.lit(1)).alias("n"), F.countDistinct(_DV_H).alias("d")
-        ).first()
-        _DV_HASH_OK[key] = c.n == c.d
-    return hm if _DV_HASH_OK[key] else None
-
-
-_DV_PACK: dict[tuple, tuple | None] = {}
-#: num_rows per ABSOLUTE file path, from the parquet footer. Files in
-#: a committed snapshot are immutable, so this never invalidates; the
-#: sentinel None records an unreadable footer. Caching per FILE (not
-#: per entry subset) means distinct pruned subsets of one table share
-#: the footer walk instead of re-reading shared files (round-9 ADVICE).
-_DV_FILE_ROWS: dict[str, int | None] = {}
-
-
-def _dv_posbits(path: str, rels: list[str]) -> int | None:
-    """Bits needed to hold any row ordinal of any entry file: max over
-    files of bit_length(num_rows - 1), from parquet footer metadata
-    alone (O(#files) driver work, footer reads cached per file). None
-    when a footer is unreadable — packing is then unavailable and the
-    read keys on the two-column form."""
-    root = os.path.abspath(path)
-    import pyarrow.parquet as pq
-
-    mx = 1
-    for r in rels:
-        p = r if os.path.isabs(r) else os.path.join(root, r)
-        if p not in _DV_FILE_ROWS:
-            try:
-                _DV_FILE_ROWS[p] = pq.ParquetFile(p).metadata.num_rows
-            except Exception:
-                _DV_FILE_ROWS[p] = None
-        n = _DV_FILE_ROWS[p]
-        if n is None:
+        except Exception:  # any probe failure: exact fallback, retried
             return None
-        mx = max(mx, n)
-    return max((mx - 1).bit_length(), 1)
-
-
-def _dv_pack_base(spark: SparkSession, path: str, rels: list[str], hm):
-    """(posbits, hash mask, {entry rel -> packed base}) for the
-    SINGLE-long exact DV key, or None when packing cannot be verified.
-
-    Why: a BroadcastHashJoin whose key is ONE long probes Spark's
-    LongHashedRelation (primitive open-addressing map); two long keys
-    force the UnsafeHashedRelation path — per probe an UnsafeRow
-    projection plus byte-wise hash/compare — measured ~10x slower per
-    row on a 60 M-row anti-join (tools/bench_dv_decomp.py: 0.52 s vs
-    7.7 s on identical range inputs). So the (file, ordinal) pair is
-    packed losslessly into one 64-bit key:
-
-        key = (xxhash64(raw file path) & mask) << posbits | ordinal
-
-    with posbits sized from footer metadata so every ordinal fits
-    (_dv_posbits) and mask = (1 << (63 - posbits)) - 1. Exactness is
-    VERIFIED, not assumed: the driver checks the truncated hashes are
-    pairwise distinct across the COMPLETE entry set — the only file
-    universe a scan or DV can mention — so key equality is equivalent
-    to (file, ordinal) equality; any failure (footer unreadable,
-    truncation collision, ordinal width leaving no hash bits) returns
-    None and the read falls back to the two-column keying. Top bit is
-    always 0 (posbits + hashbits = 63), so the packed key is
-    non-negative and overflow-free."""
-    if _dv_keying(spark) != "auto":
-        return None
-    root = os.path.abspath(path)
-    key = (root, tuple(rels))
-    if key in _DV_PACK:
-        return _DV_PACK[key]
-    out = None
+        raw = row[0][0] if row else None
+        if not raw or not raw.endswith(probe):
+            return None
+        pref = raw[: len(raw) - len(probe)]
+        _cache_put(_DV_URI_PREFIX, root, pref)
     posbits = _dv_posbits(path, rels)
-    if posbits is not None and posbits < 63:
+    if posbits is None:
+        return None
+    out = None
+    if posbits < 63:
         mask = (1 << (63 - posbits)) - 1
+        hashes = spark.createDataFrame(
+            [(r, pref + a) for r, a in zip(rels, abss)],
+            f"{_DV_FILE} string, __dv_raw string",
+        ).select(_DV_FILE, F.xxhash64("__dv_raw").alias("h"))
         # python & on a negative (two's-complement) long equals the
         # JVM's bigint AND for a non-negative mask — same bit pattern
-        bases = {
-            r[_DV_FILE]: (r[_DV_H] & mask) << posbits for r in hm.collect()
-        }
+        bases = {r[_DV_FILE]: (r.h & mask) << posbits for r in hashes.collect()}
         if len(set(bases.values())) == len(bases):
             out = (posbits, mask, bases)
-    _DV_PACK[key] = out
+    _cache_put(_DV_PACK, key, out)
     return out
 
-#: Above this many live deletion-vector rows the read path stops
-#: HINTING a broadcast for the anti-join (a (path, ordinal) row is
-#: ~100 B serialized; 1M rows ≈ 100 MB to every task) and lets the
-#: planner shuffle instead — the regime between "a few deletes" and
-#: "compaction materialized them".
+#: Above this many DV rows the CDF, lake_update and lake_maintain
+#: paths stop HINTING a broadcast for their string-keyed
+#: (path, ordinal) joins (a row is ~100 B serialized; 1M rows ≈ 100 MB
+#: to every task) and let the planner shuffle instead; it is also
+#: lake_maintain's default drain threshold.
 _DV_BROADCAST_MAX_ROWS = 1_000_000
 
-#: Between the string-keyed broadcast bound above and THIS many DV
-#: rows, the anti-join build side is re-keyed to a compact
-#: (int file-id, long ordinal) pair (~16 B serialized vs ~100 B for a
-#: path string) and STILL broadcast — 16M keys is a few hundred MB of
-#: build relation, inside any 100-TB-class executor — because the
-#: alternative shuffles the ENTIRE table by (fid, pos) (measured at
-#: 600M rows: +33% wall over the broadcast probe, and on a real
-#: cluster that shuffle is network, not memory bandwidth). Past this
-#: bound the planner shuffles: a 60M-key broadcast was measured to
-#: exhaust task execution memory in a 40 GB JVM, and
-#: lake_maintain's max_dv_rows drain compacts long before that.
+#: Up to this many live DV rows the read's anti-join build side — a
+#: compact packed long, or an (int file-id, long ordinal) pair, ~16 B
+#: either way — is broadcast: 16M keys is a few hundred MB of build
+#: relation, inside any 100-TB-class executor, and the alternative
+#: shuffles the ENTIRE table (measured at 600M rows: +33% wall over
+#: the broadcast probe, and on a real cluster that shuffle is network,
+#: not memory bandwidth). Past this bound the planner shuffles: a
+#: 60M-key broadcast was measured to exhaust task execution memory in
+#: a 40 GB JVM, and lake_maintain's max_dv_rows drain compacts long
+#: before that.
 _DV_FID_BROADCAST_MAX_ROWS = 16_000_000
 
 
@@ -1318,10 +1265,10 @@ def _dv_rows(path: str, dvs) -> int:
                         ).metadata.num_rows
                     except Exception:
                         # doubt: the set's true size is UNKNOWN and may
-                        # be huge, so the sentinel must disable BOTH
-                        # broadcast tiers (a _DV_BROADCAST_MAX_ROWS+1
-                        # sentinel sat under the fid tier's threshold
-                        # and force-broadcast unknown-size sets)
+                        # be huge, so the sentinel must exceed BOTH
+                        # broadcast bounds (a _DV_BROADCAST_MAX_ROWS+1
+                        # sentinel sat under the read's threshold and
+                        # force-broadcast unknown-size sets)
                         return _DV_FID_BROADCAST_MAX_ROWS + 1
     return total
 
@@ -1394,16 +1341,10 @@ def _read_entries(
             out = out.withColumn(_DV_FILE, F.lit(None).cast("string"))
             out = out.withColumn(_DV_POS, F.lit(None).cast("bigint"))
         return out
-    # hash-keyed DV anti-join (the fast path: raw-path xxhash64 per
-    # row, zero per-row string decode) — decided up front because the
-    # scans must attach the hash column; None → decoded-string keying
-    dv_hash = None
-    dv_pack = None
+    # the packed key is decided up front because the scans must attach
+    # it; None → the file-id keying on the decoded entry path
     rels = sorted({_entry_rel(e) for e in entries})
-    if dvs:
-        dv_hash = _dv_hash_map(spark, path, rels)
-        if dv_hash is not None:
-            dv_pack = _dv_pack_base(spark, path, rels, dv_hash)
+    dv_pack = _dv_pack(spark, path, rels) if dvs else None
 
     def _scan(paths: list[str], base: str | None = None) -> DataFrame:
         r = spark.read.schema(schema)
@@ -1415,16 +1356,15 @@ def _read_entries(
             # _metadata is only addressable ON the scan relation —
             # attach before any union. The decoded rel column only
             # exists when something will consume it (keep_meta
-            # callers, or the decoded-keying fallback): its
-            # url_decode/regexp chain is the measured per-row
-            # dominator of the in-debt read (tools/bench_dv_micro.py)
+            # callers, or the file-id fallback): its url_decode/regexp
+            # chain is the measured per-row dominator of the in-debt
+            # read (OPTIMIZATION_r09.md)
             extra = []
-            if keep_meta or dv_hash is None:
-                extra.append(rel.alias(_DV_FILE))
+            if keep_meta or dv_pack is None:
+                extra += [rel.alias(_DV_FILE), pos.alias(_DV_POS)]
             if dv_pack is not None:
-                # packed single-long exact key (_dv_pack_base): the
-                # ordinal rides INSIDE the key, so the separate pos
-                # column is only materialized for keep_meta consumers
+                # the ordinal rides INSIDE the packed key, so the
+                # separate pos column is only kept for keep_meta
                 posbits, mask, _bases = dv_pack
                 extra.append(
                     F.shiftleft(
@@ -1436,12 +1376,6 @@ def _read_entries(
                     .bitwiseOR(pos)
                     .alias(_DV_K)
                 )
-            elif dv_hash is not None:
-                extra.append(
-                    F.xxhash64(F.col("_metadata.file_path")).alias(_DV_H)
-                )
-            if keep_meta or dv_pack is None:
-                extra.append(pos.alias(_DV_POS))
             df = df.select("*", *extra)
         return df
 
@@ -1484,80 +1418,46 @@ def _read_entries(
     for d in scans[1:]:
         out = out.unionByName(d)
     if dvs:
+        # Both keyings map the DV set's entry-form rel strings to a
+        # compact key through a broadcast manifest-scale map, so the
+        # anti-join never ships ~100 B path strings per key (measured
+        # 53× a plain filter at sf10). Packed (_dv_pack): ONE exact
+        # long per side, the LongHashedRelation fast path; the table
+        # side packed at the scan. File-id fallback: both sides re-key
+        # to (int file-id, long ordinal) ≈ 16 B. Up to
+        # _DV_FID_BROADCAST_MAX_ROWS the build side is broadcast — the
+        # table side never moves, which at 100 TB is the whole game
+        # (measured at 600M rows / 60M DV keys: the shuffled form pays
+        # 98 s of table shuffle). Beyond it the planner shuffles;
+        # lake_maintain's max_dv_rows drain compacts long before that.
         dv_df = spark.read.schema(_DV_SCHEMA).parquet(
             *[os.path.join(path, d) for d in dvs]
         )
-        n_dv = _dv_rows(path, dvs)  # one driver-side footer walk, both tiers
         if dv_pack is not None:
-            # Packed regime (default): ONE exact long key per side —
-            # the anti-join probes the LongHashedRelation fast path
-            # (bench_dv_decomp: ~10x the two-long-key probe). The
-            # build side maps DV rel strings to verified packed bases
-            # through a broadcast manifest-scale map and ORs in the
-            # ordinal; the table side packed at the scan.
-            posbits, mask, bases = dv_pack
-            base_df = spark.createDataFrame(
-                sorted(bases.items()),
+            key_df = spark.createDataFrame(
+                sorted(dv_pack[2].items()),
                 f"{_DV_FILE} string, __dv_base bigint",
             )
-            dv_keys = dv_df.join(F.broadcast(base_df), [_DV_FILE]).select(
+            dv_keys = dv_df.join(F.broadcast(key_df), [_DV_FILE]).select(
                 F.col("__dv_base").bitwiseOR(F.col(_DV_POS)).alias(_DV_K)
             )
-            if n_dv <= _DV_FID_BROADCAST_MAX_ROWS:
-                dv_keys = F.broadcast(dv_keys)
-            out = out.join(dv_keys, [_DV_K], "left_anti")
-        elif dv_hash is not None:
-            # Hash regime (default): both sides key on (xxhash64 of
-            # the raw file path, row ordinal) — 16 B keys, no per-row
-            # decode anywhere, ONE anti-join. The build side maps the
-            # DV set's rel strings to hashes through the broadcast
-            # manifest-scale map; the table side computed its hash at
-            # the scan. Broadcastable up to the compact-key bound;
-            # past it the anti-join sheds the hint and shuffles
-            # (lake_maintain's max_dv_rows drain compacts long
-            # before).
-            dv_keys = dv_df.join(F.broadcast(dv_hash), [_DV_FILE]).select(
-                _DV_H, _DV_POS
-            )
-            if n_dv <= _DV_FID_BROADCAST_MAX_ROWS:
-                dv_keys = F.broadcast(dv_keys)
-            out = out.join(dv_keys, [_DV_H, _DV_POS], "left_anti")
-        elif n_dv <= _DV_BROADCAST_MAX_ROWS:
-            out = out.join(
-                F.broadcast(dv_df), [_DV_FILE, _DV_POS], "left_anti"
-            )
+            keys = [_DV_K]
         else:
-            # Bulk-delete regime: table-scale DV sets. A string-keyed
-            # broadcast would ship ~100 B of file path per key to
-            # every task (measured 53× a plain filter at sf10), so
-            # both sides re-key to a manifest-scale integer id (one
-            # broadcast dict of #files entries) and the anti-join
-            # keys drop to (int, long) ≈ 16 B. Up to
-            # _DV_FID_BROADCAST_MAX_ROWS the compact build side is
-            # STILL broadcast — the table side never moves, which at
-            # 100 TB is the whole game (measured at 600M rows / 60M
-            # DV keys: the shuffled form pays 98 s of table shuffle;
-            # the broadcast probe stays at scan speed). Beyond it the
-            # planner shuffles; lake_maintain's max_dv_rows drain
-            # compacts long before that.
-            fid = "__dv_fid"
             id_df = spark.createDataFrame(
                 [(r, i) for i, r in enumerate(rels)],
-                f"{_DV_FILE} string, {fid} int",
+                f"{_DV_FILE} string, {_DV_FID} int",
             )
-            dv_keys = dv_df.join(
-                F.broadcast(id_df), [_DV_FILE], "inner"
-            ).select(fid, _DV_POS)
-            if n_dv <= _DV_FID_BROADCAST_MAX_ROWS:
-                dv_keys = F.broadcast(dv_keys)
-            out = (
-                out.join(F.broadcast(id_df), [_DV_FILE], "left")
-                .join(dv_keys, [fid, _DV_POS], "left_anti")
-                .drop(fid)
+            dv_keys = dv_df.join(F.broadcast(id_df), [_DV_FILE]).select(
+                _DV_FID, _DV_POS
             )
+            out = out.join(F.broadcast(id_df), [_DV_FILE], "left")
+            keys = [_DV_FID, _DV_POS]
+        if _dv_rows(path, dvs) <= _DV_FID_BROADCAST_MAX_ROWS:
+            dv_keys = F.broadcast(dv_keys)
+        out = out.join(dv_keys, keys, "left_anti")
     if want_meta and not keep_meta:
         out = out.drop(_DV_FILE, _DV_POS)
-    out = out.drop(_DV_H, _DV_K)  # join-key only, never a consumer surface
+    out = out.drop(_DV_K, _DV_FID)  # join keys only, never a consumer surface
     if phys:
         cols = [
             F.col(phys.get(f.name, f.name)).alias(f.name)

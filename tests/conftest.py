@@ -24,8 +24,35 @@ def _slow_ids() -> frozenset[str]:
         return frozenset()
 
 
+def _stale_slow_ids(slow, items) -> list[str]:
+    """Entries naming a test their (collected) module no longer
+    defines — a renamed or deleted test would otherwise silently leave
+    the slow tier. Entries for files outside this run stay silent."""
+    modules = {
+        item.nodeid.split("::")[0]: item.module
+        for item in items
+        if getattr(item, "module", None) is not None
+    }
+    stale = []
+    for entry in sorted(slow):
+        f, _, name = entry.partition("::")
+        if f not in modules:
+            continue
+        obj = modules[f]
+        for part in name.split("[")[0].split("::"):  # Class::test_x
+            obj = getattr(obj, part, None)
+        if obj is None:
+            stale.append(entry)
+    return stale
+
+
 def pytest_collection_modifyitems(config, items):
     slow = _slow_ids()
+    stale = _stale_slow_ids(slow, items)
+    if stale:
+        raise pytest.UsageError(
+            f"{_SLOW_LIST} names tests that do not exist: {', '.join(stale)}"
+        )
     for item in items:
         if item.nodeid in slow:
             item.add_marker(pytest.mark.slow)

@@ -1478,16 +1478,14 @@ def _anti_lines(df):
     return [l for l in plan.splitlines() if "Join LeftAnti" in l]
 
 
-def test_dv_hash_keying_regimes(spark, tmp_path, monkeypatch):
-    """Default DV keying hashes the RAW `_metadata.file_path`
+def test_dv_packed_keying_broadcast_bound(spark, tmp_path, monkeypatch):
+    """Packed DV keying hashes the RAW `_metadata.file_path`
     (xxhash64) on the table side and driver-predicted raw paths on
     the DV side — no per-row decode chain anywhere (the measured
-    dominator of the in-debt read at 600 M rows). Two regimes by
-    live-DV-row count: compact (long, long) keys broadcast up to
-    _DV_FID_BROADCAST_MAX_ROWS — the table side never shuffles —
-    then the anti-join sheds the hint and shuffles (the regime
-    lake_maintain's drain exists to prevent). The old string-keyed
-    tier bound is irrelevant here: hash keys are ALWAYS compact."""
+    dominator of the in-debt read at 600 M rows). The compact key
+    broadcasts up to _DV_FID_BROADCAST_MAX_ROWS — the table side never
+    shuffles — then the anti-join sheds the hint and shuffles (the
+    regime lake_maintain's drain exists to prevent)."""
     import ndvi_etl_pipeline_spark.sources.lake as L
 
     t = str(tmp_path / "t")
@@ -1498,13 +1496,7 @@ def test_dv_hash_keying_regimes(spark, tmp_path, monkeypatch):
     assert "xxhash64" in plan and "UrlCodec" not in plan
     small = _anti_lines(small_df)
     assert small and all("strategy=broadcast" in l for l in small)
-    # the string-tier bound does NOT demote hash keys to the fid path
-    monkeypatch.setattr(L, "_DV_BROADCAST_MAX_ROWS", 5)
-    mid_df = lake_read(spark, t)
-    mid = _anti_lines(mid_df)
-    assert mid and all("strategy=broadcast" in l for l in mid)
-    assert "__dv_fid" not in mid_df._jdf.queryExecution().optimizedPlan().toString()
-    assert {r.k for r in mid_df.collect()} == set(range(1, 100, 2))
+    assert {r.k for r in small_df.collect()} == set(range(1, 100, 2))
     # past the compact-key bound the anti-join loses the hint
     monkeypatch.setattr(L, "_DV_FID_BROADCAST_MAX_ROWS", 5)
     big = _anti_lines(lake_read(spark, t))
@@ -1515,73 +1507,44 @@ def test_dv_hash_keying_regimes(spark, tmp_path, monkeypatch):
 def test_dv_antijoin_drops_broadcast_hint_above_threshold(
     spark, tmp_path, monkeypatch
 ):
-    """The decoded-string fallback (spark.ndvi_etl.dvKeying=decoded,
-    also auto-taken for paths outside the URI-safe charset) keeps the
-    round-8 three-regime contract: small sets broadcast string-keyed;
-    bulk sets re-key to compact (int fid, long pos) and STILL
-    broadcast — the table side must never shuffle; only past
-    _DV_FID_BROADCAST_MAX_ROWS does the anti-join lose the hint and
-    shuffle."""
+    """The file-id fallback (taken for paths outside the URI-safe
+    charset, here a space) keys the anti-join on compact (int fid,
+    long pos) pairs and broadcasts them — the table side must never
+    shuffle; only past _DV_FID_BROADCAST_MAX_ROWS does the anti-join
+    lose the hint and shuffle."""
     import ndvi_etl_pipeline_spark.sources.lake as L
 
-    t = str(tmp_path / "t")
+    t = str(tmp_path / "a b" / "t")
     lake_write(_df(spark, [(i, "v") for i in range(100)]).coalesce(1), t)
     lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
-    spark.conf.set(L.DV_KEYING_CONF, "decoded")
-    try:
-        small = _anti_lines(lake_read(spark, t))
-        assert small and all("strategy=broadcast" in l for l in small)
-        monkeypatch.setattr(L, "_DV_BROADCAST_MAX_ROWS", 5)
-        # fid tier: the anti-join keeps a broadcast hint, but on the
-        # COMPACT fid-keyed side (the plan now carries the id mapping)
-        mid_df = lake_read(spark, t)
-        mid = _anti_lines(mid_df)
-        assert mid and all("strategy=broadcast" in l for l in mid)
-        assert (
-            "__dv_fid"
-            in mid_df._jdf.queryExecution().optimizedPlan().toString()
-        )
-        assert {r.k for r in mid_df.collect()} == set(range(1, 100, 2))
-        monkeypatch.setattr(L, "_DV_FID_BROADCAST_MAX_ROWS", 5)
-        # past the fid bound the ANTI-JOIN itself loses the hint (the
-        # manifest-scale id-mapping broadcasts the branch adds are fine)
-        big = _anti_lines(lake_read(spark, t))
-        assert big and all("strategy=broadcast" not in l for l in big)
-        # rows identical in every regime
-        assert {r.k for r in lake_read(spark, t).collect()} == set(
-            range(1, 100, 2)
-        )
-    finally:
-        spark.conf.unset(L.DV_KEYING_CONF)
+    small_df = lake_read(spark, t)
+    small = _anti_lines(small_df)
+    assert small and all("strategy=broadcast" in l for l in small)
+    assert (
+        "__dv_fid" in small_df._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert {r.k for r in small_df.collect()} == set(range(1, 100, 2))
+    monkeypatch.setattr(L, "_DV_FID_BROADCAST_MAX_ROWS", 5)
+    # past the fid bound the ANTI-JOIN itself loses the hint (the
+    # manifest-scale id-mapping broadcasts the branch adds are fine)
+    big_df = lake_read(spark, t)
+    big = _anti_lines(big_df)
+    assert big and all("strategy=broadcast" not in l for l in big)
+    assert {r.k for r in big_df.collect()} == set(range(1, 100, 2))
 
 
 def test_dv_hash_keying_falls_back_on_unsafe_path(spark, tmp_path):
     """A table root containing a char the file URI percent-encodes
-    (space) must auto-fall back to decoded-string keying — predicted
-    raw paths could not be trusted — and still return exact rows."""
-    import ndvi_etl_pipeline_spark.sources.lake as L
-
+    (space) must auto-fall back to the file-id keying on the decoded
+    path — predicted raw paths could not be trusted — and still return
+    exact rows."""
     t = str(tmp_path / "a b" / "t")
     lake_write(_df(spark, [(i, "v") for i in range(20)]).coalesce(1), t)
     lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
     df = lake_read(spark, t)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "UrlCodec" in plan  # decoded fallback engaged
+    assert "UrlCodec" in plan and "__dv_fid" in plan  # fallback engaged
     assert sorted(r.k for r in df.collect()) == list(range(1, 20, 2))
-
-
-def test_dv_hash_keying_keep_meta_exposes_decoded_rel(spark, tmp_path):
-    """keep_meta consumers (dv-delete hit addressing) still get the
-    DECODED entry-form rel even in hash mode — the hash is a join key,
-    never a consumer surface — proven by chaining a second dv-delete
-    (which addresses rows via keep_meta) on a hash-keyed table."""
-    t = str(tmp_path / "t")
-    lake_write(_df(spark, [(i, "v") for i in range(30)]).coalesce(2), t)
-    lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
-    lake_delete(spark, t, F.col("k") % 3 == 0, strategy="dv")
-    got = sorted(r.k for r in lake_read(spark, t).collect())
-    assert got == [k for k in range(1, 30, 2) if k % 3 != 0]
-    assert "__dv_h" not in lake_read(spark, t).columns
 
 
 def test_truncation_marker_only_when_max_synthesized(spark, tmp_path):

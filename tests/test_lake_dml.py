@@ -823,9 +823,10 @@ def test_sql_write_partitioned_by_spec_evolution(spark, tmp_path):
 
 def test_dv_rows_unreadable_footer_disables_both_broadcast_tiers(tmp_path):
     """_dv_rows' failure sentinel means 'size unknown — do not force
-    broadcast'. It must exceed BOTH broadcast thresholds: a sentinel
-    between the string-key and int-fid tiers would force-broadcast a
-    DV set of truly unknown (possibly huge) size (round-8 ADVICE)."""
+    broadcast'. It must exceed BOTH broadcast thresholds (the CDF/update
+    bound and the read's compact-key bound): a sentinel between them
+    would force-broadcast a DV set of truly unknown (possibly huge)
+    size."""
     import ndvi_etl_pipeline_spark.sources.lake as L
 
     droot = tmp_path / "_dv" / "set0"

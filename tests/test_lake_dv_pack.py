@@ -1,20 +1,21 @@
-"""Packed single-long DV keying (sources/lake.py:_dv_pack_base):
-exactness of the (file, ordinal) -> one-64-bit-key encoding, plan
-shape (single-key anti-join, pos folded into the key), parity across
-the three keying modes, and every fallback arm.
+"""DV anti-join keying (sources/lake.py:_dv_pack): exactness of the
+packed (file, ordinal) -> one-64-bit-key encoding, plan shape
+(single-key anti-join, pos folded into the key), parity with the exact
+file-id fallback, and every fallback arm.
 
 Why this exists: a BroadcastHashJoin keyed on ONE long probes Spark's
 LongHashedRelation fast path; two long keys force UnsafeHashedRelation
 (per-probe UnsafeRow projection + byte compare), measured ~10x slower
-per row at 60 M rows (tools/bench_dv_decomp.py). The packing must
-never trade that speed for correctness — these tests pin the verified
-fallbacks."""
+per row at 60 M rows (OPTIMIZATION_r09.md, re-checked in
+OPTIMIZATION_r10.md §5). The packing must never trade that speed for
+correctness — these tests pin the verified fallbacks."""
 
 import pyspark.sql.functions as F
 
 import ndvi_etl_pipeline_spark.sources.lake as L
 from ndvi_etl_pipeline_spark.sources.lake import (
     lake_delete,
+    lake_merge,
     lake_read,
     lake_write,
 )
@@ -33,45 +34,42 @@ def _anti_lines(df):
 
 
 def test_packed_keying_default_plan_and_rows(spark, tmp_path):
-    """Default ('auto') DV keying packs: the anti-join keys on the
-    single __dv_k long (shiftleft/OR visible in the plan), no
-    two-column (__dv_h, __dv_pos) key pair, rows exact, broadcast
-    hint kept."""
+    """DV keying packs whenever its guards hold: the anti-join keys on
+    the single __dv_k long (shiftleft/OR visible in the plan), no
+    file-id (__dv_fid, __dv_pos) key pair, rows exact, broadcast hint
+    kept."""
     t = str(tmp_path / "t")
     lake_write(_df(spark, [(i, "v") for i in range(100)]).coalesce(2), t)
     lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
     df = lake_read(spark, t)
     plan = _plan(df)
     assert "__dv_k" in plan and "shiftleft" in plan
-    assert "__dv_h" not in plan  # the 2-key form never materializes
+    assert "__dv_fid" not in plan  # the 2-key form never materializes
     anti = _anti_lines(df)
     assert anti and all("strategy=broadcast" in l for l in anti)
     assert sorted(r.k for r in df.collect()) == list(range(1, 100, 2))
 
 
-def test_packed_vs_hash2_vs_decoded_parity(spark, tmp_path):
-    """All three keying modes return the identical visible row set on
-    a multi-file table with two chained DV deletes."""
-    t = str(tmp_path / "t")
-    lake_write(_df(spark, [(i, "v") for i in range(300)]).coalesce(3), t)
-    lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
-    lake_delete(spark, t, F.col("k") % 3 == 0, strategy="dv")
-    want = sorted(k for k in range(300) if k % 2 and k % 3)
-    got = {}
-    for mode in ("auto", "hash2", "decoded"):
-        spark.conf.set(L.DV_KEYING_CONF, mode)
-        try:
-            got[mode] = sorted(r.k for r in lake_read(spark, t).collect())
-        finally:
-            spark.conf.unset(L.DV_KEYING_CONF)
-    assert got["auto"] == got["hash2"] == got["decoded"] == want
-    # and the modes really took different key paths
-    spark.conf.set(L.DV_KEYING_CONF, "hash2")
-    try:
-        p2 = _plan(lake_read(spark, t))
-        assert "__dv_h" in p2 and "__dv_k" not in p2
-    finally:
-        spark.conf.unset(L.DV_KEYING_CONF)
+def test_packed_and_fid_keying_parity(spark, tmp_path):
+    """The same rows under a URI-safe root (packed keying) and under a
+    root containing a space (exact file-id fallback), each put through
+    two chained DV deletes and one MoR merge, read back identically."""
+    rows = [(i, "v") for i in range(300)]
+    upd = [(k, "u") for k in range(1, 300, 7)] + [(300, "new")]
+    plans, got = [], []
+    for t in (str(tmp_path / "safe" / "t"), str(tmp_path / "a b" / "t")):
+        lake_write(_df(spark, rows).coalesce(3), t)
+        lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
+        lake_delete(spark, t, F.col("k") % 3 == 0, strategy="dv")
+        lake_merge(spark, _df(spark, upd), t, keys=("k",), strategy="mor")
+        df = lake_read(spark, t)
+        plans.append(_plan(df))
+        got.append(sorted((r.k, r.v) for r in df.collect()))
+    live = {k: "v" for k in range(300) if k % 2 and k % 3}
+    live.update(upd)
+    assert got[0] == got[1] == sorted(live.items())
+    assert "__dv_k" in plans[0] and "__dv_fid" not in plans[0]
+    assert "__dv_fid" in plans[1] and "__dv_k" not in plans[1]
 
 
 def test_pack_falls_back_when_hash_bits_collide(spark, tmp_path, monkeypatch):
@@ -79,7 +77,7 @@ def test_pack_falls_back_when_hash_bits_collide(spark, tmp_path, monkeypatch):
     set's truncated hashes to stay distinct (forced here by pretending
     every file holds 2^62 rows -> ONE hash bit for three files, a
     pigeonhole-guaranteed collision), packing must refuse and the read
-    must take the two-column hash keying — rows exact either way."""
+    must take the file-id keying — rows exact either way."""
     t = str(tmp_path / "t")
     lake_write(_df(spark, [(i, "v") for i in range(90)]).coalesce(3), t)
     lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
@@ -87,7 +85,7 @@ def test_pack_falls_back_when_hash_bits_collide(spark, tmp_path, monkeypatch):
     L._DV_PACK.clear()
     df = lake_read(spark, t)
     plan = _plan(df)
-    assert "__dv_h" in plan and "__dv_k" not in plan
+    assert "__dv_fid" in plan and "__dv_k" not in plan
     assert sorted(r.k for r in df.collect()) == list(range(1, 90, 2))
     L._DV_PACK.clear()
 
@@ -101,11 +99,43 @@ def test_pack_falls_back_when_footers_unreadable(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(L, "_dv_posbits", lambda path, rels: None)
     L._DV_PACK.clear()
     df = lake_read(spark, t)
-    assert "__dv_k" not in _plan(df)
+    plan = _plan(df)
+    assert "__dv_fid" in plan and "__dv_k" not in plan
     assert sorted(r.k for r in df.collect()) == [
         k for k in range(40) if k % 4
     ]
     L._DV_PACK.clear()
+
+
+def test_transient_footer_failure_is_not_cached(spark, tmp_path, monkeypatch):
+    """A footer read that fails once must cost one read its packing,
+    not every later one: the next read packs again, rows exact both
+    times."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = str(tmp_path / "t")
+    lake_write(_df(spark, [(i, "v") for i in range(40)]).coalesce(2), t)
+    lake_delete(spark, t, F.col("k") % 4 == 0, strategy="dv")
+    m = L._read_manifest(t, L._latest_version(t))
+    data = {os.path.join(t, L._entry_rel(e)) for e in m["files"]}
+    real, failed = pq.ParquetFile, []
+
+    def flaky(p, *a, **kw):
+        if p in data and not failed:
+            failed.append(p)
+            raise OSError("transient footer read failure")
+        return real(p, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", flaky)
+    want = [k for k in range(40) if k % 4]
+    first = lake_read(spark, t)
+    assert failed and "__dv_k" not in _plan(first)
+    assert sorted(r.k for r in first.collect()) == want
+    again = lake_read(spark, t)
+    assert "__dv_k" in _plan(again)
+    assert sorted(r.k for r in again.collect()) == want
 
 
 def test_posbits_from_footer_metadata(spark, tmp_path):
@@ -136,23 +166,6 @@ def test_packed_key_is_exact_same_ordinal_across_files(spark, tmp_path):
     out = lake_read(spark, t)
     assert "__dv_k" in _plan(out)
     assert sorted(r.k for r in out.collect()) == list(range(10, 30))
-
-
-def test_dv_keying_conf_typo_raises(spark, tmp_path):
-    """An unrecognized dvKeying value must error, not silently select
-    a mode — a parity/bench run that believes it forced 'hash2' but
-    typed 'hash' would measure the wrong plan."""
-    import pytest
-
-    t = str(tmp_path / "t")
-    lake_write(_df(spark, [(i, "v") for i in range(10)]).coalesce(1), t)
-    lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
-    spark.conf.set(L.DV_KEYING_CONF, "hash")
-    try:
-        with pytest.raises(ValueError, match="dvKeying"):
-            lake_read(spark, t)
-    finally:
-        spark.conf.unset(L.DV_KEYING_CONF)
 
 
 def test_posbits_per_file_cache_shared_across_subsets(spark, tmp_path):
@@ -188,4 +201,4 @@ def test_packed_keep_meta_chained_deletes(spark, tmp_path):
     got = sorted(r.k for r in lake_read(spark, t).collect())
     assert got == [k for k in range(1, 30, 2) if k % 3 != 0]
     cols = lake_read(spark, t).columns
-    assert "__dv_k" not in cols and "__dv_h" not in cols
+    assert "__dv_k" not in cols and "__dv_fid" not in cols

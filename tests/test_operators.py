@@ -179,6 +179,22 @@ def test_winnowing_detects_partial_overlap(spark):
     assert not fps[3] & fps[2]
 
 
+def test_winnowing_window_of_one_keeps_every_kgram_hash(spark):
+    """w=1 selects every k-gram hash (each window holds one)."""
+    import hashlib
+
+    from ndvi_etl_pipeline_spark.functions.text import winnowing_fingerprints
+
+    text = "abcdefghij"
+    df = spark.createDataFrame([(text,)], ["text"])
+    got = df.select(winnowing_fingerprints("text", k=8, w=1)).first()[0]
+    want = {
+        hashlib.md5(text[i : i + 8].encode()).hexdigest()[:8]
+        for i in range(len(text) - 7)
+    }
+    assert sorted(got) == sorted(want)
+
+
 def test_connected_components_chain_and_island(spark):
     from ndvi_etl_pipeline_spark.operators.dedup import connected_components
 

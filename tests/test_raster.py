@@ -197,44 +197,6 @@ def test_scan_scene_ndvi_matches_codec_path(spark, tmp_path):
     }
 
 
-def test_arrow_and_pandas_kernels_agree(spark, tmp_path):
-    """The mapInArrow/applyInArrow fast paths must emit bit-identical
-    rows to the pandas kernels they replace — same tiles, same
-    payload bytes, same partial aggregates."""
-    rng = np.random.default_rng(11)
-    for i in range(2):
-        scene = f"AR{i:02d}_20220601"
-        red = rng.integers(0, 30000, size=(70, 90)).astype(np.float32)
-        nir = rng.integers(0, 60000, size=(70, 90)).astype(np.float32)
-        raster.write_geotiff(red, str(tmp_path / f"{scene}_red.tif"))
-        raster.write_geotiff(nir, str(tmp_path / f"{scene}_nir.tif"))
-
-    def tile_set(df):
-        return {
-            (r.scene_id, r.band, r.tile_y, r.tile_x, r.y0, r.x0, bytes(r.data))
-            for r in df.collect()
-        }
-
-    arrow_scan = raster.scan_geotiffs(spark, str(tmp_path), tile=32, use_arrow=True)
-    pandas_scan = raster.scan_geotiffs(spark, str(tmp_path), tile=32, use_arrow=False)
-    assert tile_set(arrow_scan) == tile_set(pandas_scan)
-
-    parsed = raster.parse_band_files(
-        spark.read.format("binaryFile").load(str(tmp_path))
-    )
-
-    def ndvi_set(df):
-        return {
-            (r.scene_id, r.tile_y, r.tile_x, bytes(r.data), r.n_pixels, r.n_valid,
-             round(r.sum_ndvi, 9))
-            for r in df.collect()
-        }
-
-    a = raster.scene_ndvi_from_bands(parsed, tile=32, use_arrow=True)
-    p = raster.scene_ndvi_from_bands(parsed, tile=32, use_arrow=False)
-    assert ndvi_set(a) == ndvi_set(p)
-
-
 def test_scan_scene_ndvi_quarantines_bad_scene(spark, tmp_path):
     """E1 per-scene failure isolation: a corrupt band file must drop
     only its own scene under on_error='quarantine', and fail the job

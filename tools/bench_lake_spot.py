@@ -131,11 +131,10 @@ def main() -> int:
         f"({result['ratios']['dv_read_small_vs_plain_scan']}x plain scan)\n"
     )
 
-    # --- MID-TIER DV read: +2% deleted (fid-keyed compact broadcast) -----
-    # 12.6M cumulative DV rows: past the string-keyed broadcast bound,
-    # inside _DV_FID_BROADCAST_MAX_ROWS — the anti-join build side
-    # re-keys to (int fid, long pos) and broadcasts; the table side
-    # never shuffles
+    # --- MID-TIER DV read: +2% deleted (compact-key broadcast) ----------
+    # 12.6M cumulative DV rows: inside _DV_FID_BROADCAST_MAX_ROWS — the
+    # anti-join build side is a compact key and broadcasts; the table
+    # side never shuffles
     t0 = time.perf_counter()
     lake_delete(spark, table, F.col("l_orderkey") % 50 == 7, strategy="dv")
     result["spark"]["dv_mid_delete_commit"] = round(time.perf_counter() - t0, 3)
@@ -219,29 +218,6 @@ def main() -> int:
         warm / result["spark"]["plain_filtered_read"]["warm"], 3
     )
     sys.stderr.write(f"merge_mor: {result['spark']['merge_mor']}\n")
-
-    # --- decoded-keying comparator (round-8 code path) -------------------
-    # same table, same DV debt, spark.ndvi_etl.dvKeying=decoded: the
-    # per-row url_decode/regexp chain + string-or-fid join the hash
-    # keying replaced — the delta IS the round-9 fix, measured on one
-    # box in one window
-    from ndvi_etl_pipeline_spark.sources.lake import DV_KEYING_CONF
-
-    spark.conf.set(DV_KEYING_CONF, "decoded")
-    try:
-        cold, warm, _ = timed(mor_read)
-    finally:
-        spark.conf.unset(DV_KEYING_CONF)
-    result["spark"]["post_mor_read_decoded_keying"] = {
-        "cold": cold, "warm": warm,
-    }
-    result["ratios"]["dv_read_hash_vs_decoded"] = round(
-        result["spark"]["post_mor_merge_read"]["warm"] / warm, 3
-    )
-    sys.stderr.write(
-        f"decoded-keying comparator: cold={cold} warm={warm} "
-        f"(hash/decoded = {result['ratios']['dv_read_hash_vs_decoded']})\n"
-    )
 
     # --- maintenance drain: the contract that bounds DV debt -------------
     # lake_maintain(max_dv_rows=1M) against the accumulated ~66M-key

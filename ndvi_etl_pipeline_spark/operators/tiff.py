@@ -1,32 +1,33 @@
-"""General pure-Python TIFF/GeoTIFF codec — the real-world
-compatibility tier of the raster source (SURVEY §2.1 S4).
+"""The engine's one TIFF/GeoTIFF codec (SURVEY §2.1 S4, K1).
 
-The engine's own write path (operators/raster.py) emits a narrow
-profile: little-endian, single IFD, float32, uncompressed strips or
-deflate+predictor-3 tiles. The reference, however, reads arbitrary
-rasterio/GDAL products (`compute_ndvi.py:38-44`), and real Landsat
-Collection-2 Level-2 bands are uint16 DN rasters with LZW or deflate
-compression, strip- or tile-organized, frequently carrying overview
-IFDs. This module decodes that envelope without GDAL:
+Every GeoTIFF the engine writes or reads goes through this module:
+operators/raster.py's `write_geotiff` / `read_geotiff` /
+`decode_geotiff_bytes` and the binaryFile scan kernels are thin
+wrappers over `write_tiff` and `decode_tiff`. The reference reads
+arbitrary rasterio/GDAL products (`compute_ndvi.py:38-44`) and writes
+tiled/deflate/predictor-3 NDVI products (`compute_ndvi.py:73-88`);
+real Landsat Collection-2 Level-2 bands are uint16 DN rasters with
+LZW or deflate compression, strip- or tile-organized, frequently
+carrying overview IFDs. This module handles that envelope without
+GDAL:
 
-- both byte orders ("II*\\0" and "MM\\0*");
+- both byte orders ("II*\\0" and "MM\\0*"), classic TIFF and BigTIFF;
 - the full IFD chain (primary + overview IFDs → `decode_tiff_ifds`);
 - strip-organized files (RowsPerStrip < height, offset/count arrays)
-  and tile-organized files;
+  and tile-organized files (partial edge tiles);
 - sample types: uint8/16/32, int8/16/32, float32/64
   (BitsPerSample × SampleFormat dispatch);
 - compression: none (1), LZW (5, the TIFF variant with MSB-first
   codes and the spec's "early change" width switch), Deflate (8/32946);
 - predictors: none (1), horizontal differencing (2, integer) and
-  floating-point differencing (3).
+  floating-point differencing (3);
+- GeoTIFF tags: ModelPixelScale, ModelTiepoint, the GeoKey EPSG code
+  (geographic or projected) and GDAL nodata.
 
 Decoding is per-strip/per-tile and vectorized (numpy cumsum for the
 predictors); the LZW inner loop is pure Python over codes, which is
 fine at the tile/strip granularity the scan kernels feed it (the
-Arrow boundary batches files, not pixels). The writer exists to
-fabricate spec-conformant fixtures for every branch (the container
-has no rasterio to make goldens with) and to round-trip-test the
-decoder; production writes stay on operators/raster.py's profile.
+Arrow boundary batches files, not pixels).
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ __all__ = [
     "lzw_decode",
     "lzw_encode",
     "parse_tiff_ifds",
+    "decode_ifd",
     "decode_tiff",
     "decode_tiff_ifds",
     "write_tiff",
@@ -439,11 +441,27 @@ def decode_tiff_ifds(buf) -> list[tuple[np.ndarray, dict]]:
 
 
 # ---------------------------------------------------------------------------
-# writer (fixtures + round-trip tests)
+# writer
 # ---------------------------------------------------------------------------
 
 _SFMT_FOR_KIND = {"u": 1, "i": 2, "f": 3}
 _COMP_CODE = {"none": 1, "lzw": 5, "deflate": 8}
+
+
+def _geokey_directory(epsg: int) -> list[int]:
+    """GeoKeyDirectory SHORTs: header, GTModelType, GTRasterType 1
+    (pixel is area), then the CRS code. The projected CRSs
+    functions/crs.py implements — UTM north/south (326xx/327xx) and
+    web mercator (3857) — get GTModelType 1 and ProjectedCSTypeGeoKey
+    (3072); every other code GTModelType 2 and GeographicTypeGeoKey
+    (2048)."""
+    projected = epsg == 3857 or 32601 <= epsg <= 32660 or 32701 <= epsg <= 32760
+    return [
+        1, 1, 0, 3,
+        1024, 0, 1, 1 if projected else 2,
+        1025, 0, 1, 1,
+        3072 if projected else 2048, 0, 1, epsg,
+    ]
 
 
 def write_tiff(
@@ -452,6 +470,7 @@ def write_tiff(
     compression: str = "none",
     predictor: int = 1,
     rows_per_strip: int | None = None,
+    tile: int | None = None,
     big_endian: bool = False,
     bigtiff: bool = False,
     origin: tuple[float, float] | None = (0.0, 0.0),
@@ -461,11 +480,18 @@ def write_tiff(
     overviews: list[np.ndarray] | None = None,
 ) -> bytes:
     """Serialize a 2-D array (plus optional overview arrays as chained
-    IFDs) as a spec-conformant striped TIFF in any supported
-    dtype/compression/predictor/endian combination. Used to fabricate
-    the exact layouts real Landsat products use (uint16 + LZW +
-    predictor 2, multi-strip, overview IFDs) so the decoder's every
-    branch has a golden."""
+    IFDs) as a spec-conformant TIFF in any supported
+    dtype/compression/predictor/endian combination — the engine's one
+    GeoTIFF writer (operators/raster.py::write_geotiff wraps it), and
+    the fabricator of the exact layouts real Landsat products use
+    (uint16 + LZW + predictor 2, multi-strip, overview IFDs) so the
+    decoder's every branch has a golden.
+
+    Layout: strips of `rows_per_strip` rows (default: one strip), or
+    with `tile=N` N×N tiles in row-major order; edge tiles are padded
+    to full size with `nodata` (0 without it)."""
+    if tile is not None and (tile <= 0 or tile % 16):
+        raise ValueError(f"tile must be a positive multiple of 16 (TIFF 6 §15), got {tile}")
     en = ">" if big_endian else "<"
     comp = _COMP_CODE[compression]
     images = [np.asarray(arr)] + [np.asarray(o) for o in (overviews or [])]
@@ -496,23 +522,27 @@ def write_tiff(
         kind = a.dtype.kind
         if kind not in _SFMT_FOR_KIND:
             raise ValueError(f"unsupported dtype {a.dtype}")
-        rps = min(rows_per_strip or h, h)
-        strips: list[bytes] = []
-        for ys in range(0, h, rps):
-            block = a[ys : ys + rps]
-            if predictor == 3:
-                raw = _apply_predictor(block, 3)
-            elif predictor == 2:
-                raw = _apply_predictor(block, 2)
-            else:
-                raw = block.tobytes()
+        if tile is not None:
+            blocks = []
+            for ys in range(0, h, tile):
+                for xs in range(0, w, tile):
+                    block = np.full((tile, tile), 0 if nodata is None else nodata, a.dtype)
+                    sub = a[ys : ys + tile, xs : xs + tile]
+                    block[: sub.shape[0], : sub.shape[1]] = sub
+                    blocks.append(block)
+        else:
+            rps = min(rows_per_strip or h, h)
+            blocks = [a[ys : ys + rps] for ys in range(0, h, rps)]
+        payloads: list[bytes] = []
+        for block in blocks:
+            raw = _apply_predictor(block, predictor)
             if comp == 5:
                 raw = lzw_encode(raw)
             elif comp == 8:
                 raw = zlib.compress(raw, 6)
-            strips.append(raw)
-        strip_offs = [emit(s) for s in strips]
-        strip_cnts = [len(s) for s in strips]
+            payloads.append(raw)
+        block_offs = [emit(p) for p in payloads]
+        block_cnts = [len(p) for p in payloads]
 
         def pack_vals(fmt: str, vals) -> bytes:
             return struct.pack(en + f"{len(vals)}{fmt}", *vals)
@@ -530,10 +560,16 @@ def write_tiff(
         add(T_BITS_PER_SAMPLE, 3, [a.dtype.itemsize * 8])
         add(T_COMPRESSION, 3, [comp])
         tags.append((262, 3, 1, pack_vals("H", [1])))  # Photometric: BlackIsZero
-        add(T_STRIP_OFFSETS, 4, strip_offs)
         tags.append((277, 3, 1, pack_vals("H", [1])))  # SamplesPerPixel
-        add(T_ROWS_PER_STRIP, 3, [rps])
-        add(T_STRIP_BYTE_COUNTS, 4, strip_cnts)
+        if tile is not None:
+            add(T_TILE_WIDTH, 3, [tile])
+            add(T_TILE_LENGTH, 3, [tile])
+            add(T_TILE_OFFSETS, 4, block_offs)
+            add(T_TILE_BYTE_COUNTS, 4, block_cnts)
+        else:
+            add(T_STRIP_OFFSETS, 4, block_offs)
+            add(T_ROWS_PER_STRIP, 3, [rps])
+            add(T_STRIP_BYTE_COUNTS, 4, block_cnts)
         if predictor != 1:
             add(T_PREDICTOR, 3, [predictor])
         add(T_SAMPLE_FORMAT, 3, [_SFMT_FOR_KIND[kind]])
@@ -543,11 +579,7 @@ def write_tiff(
             if origin is not None:
                 add(T_MODEL_TIEPOINT, 12, [0.0, 0.0, 0.0, origin[0], origin[1], 0.0])
             if epsg is not None:
-                add(
-                    T_GEO_KEY_DIRECTORY,
-                    3,
-                    [1, 1, 0, 3, 1024, 0, 1, 2, 1025, 0, 1, 1, 2048, 0, 1, epsg],
-                )
+                add(T_GEO_KEY_DIRECTORY, 3, _geokey_directory(epsg))
             if nodata is not None:
                 txt = f"{nodata:g}\x00".encode()
                 tags.append((T_GDAL_NODATA, 2, len(txt), txt))

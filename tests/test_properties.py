@@ -14,10 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ndvi_etl_pipeline_spark.functions.geo import _ray_cast_numpy
-from ndvi_etl_pipeline_spark.operators.raster import (
-    _fp_predictor_decode,
-    _fp_predictor_encode,
-)
+from ndvi_etl_pipeline_spark.operators.tiff import _apply_predictor, _undo_predictor
 from ndvi_etl_pipeline_spark.operators.warp import bilinear_sample
 
 finite_f = st.floats(
@@ -80,7 +77,8 @@ def test_fp_predictor_inverts(h, w, seed):
     rng = np.random.default_rng(seed)
     a = rng.normal(size=(h, w)).astype(np.float32)
     a[rng.random(size=(h, w)) < 0.1] = np.nan
-    back = _fp_predictor_decode(_fp_predictor_encode(a), h, w)
+    raw = np.frombuffer(_apply_predictor(a, 3), dtype=np.uint8).reshape(h, 4 * w)
+    back = _undo_predictor(raw, 3, fp_itemsize=4)
     np.testing.assert_array_equal(back, a)
 
 
@@ -114,21 +112,14 @@ def test_bilinear_exact_on_affine_fields(gy, gx, c, seed):
     tiled=st.booleans(),
 )
 def test_geotiff_roundtrip_any_shape(h, w, seed, tiled, tmp_path_factory):
-    from ndvi_etl_pipeline_spark.operators.raster import (
-        read_geotiff,
-        write_geotiff,
-        write_geotiff_tiled,
-    )
+    from ndvi_etl_pipeline_spark.operators.raster import read_geotiff, write_geotiff
 
     rng = np.random.default_rng(seed)
     a = rng.normal(size=(h, w)).astype(np.float32) * 1000
     a[rng.random(size=(h, w)) < 0.05] = np.nan
     d = tmp_path_factory.mktemp("gt")
     p = str(d / "x.tif")
-    if tiled:
-        write_geotiff_tiled(a, p, tile=32)
-    else:
-        write_geotiff(a, p)
+    write_geotiff(a, p, tile=32 if tiled else None)
     back, meta = read_geotiff(p)
     np.testing.assert_array_equal(back, a)
     assert not math.isnan(meta["nodata"])

@@ -234,8 +234,8 @@ def test_tiled_deflate_geotiff_roundtrip(tmp_path):
     smooth[::11, ::7] = np.nan
 
     p_tiled = str(tmp_path / "tiled.tif")
-    raster.write_geotiff_tiled(smooth, p_tiled, origin=(25.1, 60.6),
-                               pixel_size=(0.1, 0.1), epsg=32635)
+    raster.write_geotiff(smooth, p_tiled, origin=(25.1, 60.6),
+                         pixel_size=(0.1, 0.1), epsg=32635, tile=256)
     back, meta = raster.read_geotiff(p_tiled)
     np.testing.assert_array_equal(back, smooth)
     assert meta["epsg"] == 32635
@@ -248,12 +248,6 @@ def test_tiled_deflate_geotiff_roundtrip(tmp_path):
 
     raw_deflate = len(zlib.compress(smooth.tobytes(), 6))
     assert os.path.getsize(p_tiled) < raw_deflate * 0.9
-
-    # predictor=1 path also roundtrips
-    p1 = str(tmp_path / "p1.tif")
-    raster.write_geotiff_tiled(smooth, p1, predictor=1)
-    back1, _ = raster.read_geotiff(p1)
-    np.testing.assert_array_equal(back1, smooth)
 
     # and the binaryFile-scan decoder handles the tiled profile too
     arr2, meta2 = raster.decode_geotiff_bytes(open(p_tiled, "rb").read())
@@ -283,8 +277,8 @@ def test_scan_handles_tiled_profile_files(spark, tmp_path):
         nir = rng.integers(0, 60000, size=(70, 90)).astype(np.float32)
         raster.write_geotiff(red, str(tmp_path / "a" / f"{s}_red.tif"))
         raster.write_geotiff(nir, str(tmp_path / "a" / f"{s}_nir.tif"))
-        raster.write_geotiff_tiled(red, str(tmp_path / "b" / f"{s}_red.tif"), tile=32)
-        raster.write_geotiff_tiled(nir, str(tmp_path / "b" / f"{s}_nir.tif"), tile=32)
+        raster.write_geotiff(red, str(tmp_path / "b" / f"{s}_red.tif"), tile=32)
+        raster.write_geotiff(nir, str(tmp_path / "b" / f"{s}_nir.tif"), tile=32)
 
     def stats(d):
         return {

@@ -91,21 +91,33 @@ def test_golden_bigendian_float32_deflate():
     assert meta["nodata"] == -9999.0
 
 
+_MATRIX = [
+    # (dtype, compression, predictor, tile): tile None = strips of 10
+    # rows; tile 16 = tiled layout, partial edge tiles on both axes
+    ("uint8", "none", 1, None),
+    ("uint16", "lzw", 2, None),
+    ("uint16", "deflate", 2, None),
+    ("int16", "lzw", 2, None),
+    ("uint32", "deflate", 1, None),
+    ("float32", "deflate", 3, None),
+    ("float32", "lzw", 1, None),
+    ("float64", "none", 1, None),
+    ("float32", "deflate", 3, 16),
+    ("float32", "deflate", 1, 16),
+    ("uint16", "lzw", 2, 16),
+    ("float64", "none", 1, 16),
+]
+
+
 @pytest.mark.parametrize("big_endian", [False, True])
 @pytest.mark.parametrize(
-    "dtype,compression,predictor",
+    "dtype,compression,predictor,tile",
     [
-        ("uint8", "none", 1),
-        ("uint16", "lzw", 2),
-        ("uint16", "deflate", 2),
-        ("int16", "lzw", 2),
-        ("uint32", "deflate", 1),
-        ("float32", "deflate", 3),
-        ("float32", "lzw", 1),
-        ("float64", "none", 1),
+        pytest.param(*c, id=f"{c[0]}-{c[1]}-{c[2]}" + (f"-tile{c[3]}" if c[3] else ""))
+        for c in _MATRIX
     ],
 )
-def test_roundtrip_matrix(dtype, compression, predictor, big_endian):
+def test_roundtrip_matrix(dtype, compression, predictor, tile, big_endian):
     rng = np.random.default_rng(42)
     if dtype.startswith("float"):
         a = rng.uniform(-1000, 1000, (37, 23)).astype(dtype)
@@ -117,17 +129,39 @@ def test_roundtrip_matrix(dtype, compression, predictor, big_endian):
         compression=compression,
         predictor=predictor,
         rows_per_strip=10,
+        tile=tile,
         big_endian=big_endian,
     )
     out, _ = TF.decode_tiff(blob)
     assert np.array_equal(np.ascontiguousarray(out, dtype=a.dtype), a)
 
 
-def test_raster_decode_falls_back_to_general_codec():
-    """operators/raster.py::decode_geotiff_bytes must transparently
-    decode the uint16-LZW golden (casting DN → float32, the
-    reference's read-time cast, compute_ndvi.py:43-44) while keeping
-    the fast path for the engine's own profile."""
+@pytest.mark.parametrize(
+    "epsg,model_type,crs_key",
+    [(4326, 2, 2048), (3857, 1, 3072), (32635, 1, 3072), (32735, 1, 3072)],
+)
+def test_geokeys_label_projected_and_geographic_crs(tmp_path, epsg, model_type, crs_key):
+    """GDAL reads the CRS from the GeoKeyDirectory: a projected code
+    (UTM 326xx/327xx, web mercator 3857) needs GTModelType 1 and
+    ProjectedCSTypeGeoKey 3072; a geographic one (4326) GTModelType 2
+    and GeographicTypeGeoKey 2048."""
+    from ndvi_etl_pipeline_spark.operators import raster
+
+    p = tmp_path / "g.tif"
+    raster.write_geotiff(np.zeros((4, 4), np.float32), str(p), epsg=epsg)
+    buf = p.read_bytes()
+    en, big, ifds = TF.parse_tiff_ifds(buf)
+    shorts = TF._tag_values(buf, en, ifds[0], TF.T_GEO_KEY_DIRECTORY, big=big)
+    keys = {shorts[j]: shorts[j + 3] for j in range(4, len(shorts), 4)}
+    assert shorts[3] == len(keys) == 3
+    assert keys == {1024: model_type, 1025: 1, crs_key: epsg}
+    assert raster.read_geotiff(str(p))[1]["epsg"] == epsg
+
+
+def test_raster_decode_casts_uint16_lzw_golden():
+    """operators/raster.py::decode_geotiff_bytes must decode the
+    uint16-LZW golden, casting DN → float32 (the reference's read-time
+    cast, compute_ndvi.py:43-44)."""
     from ndvi_etl_pipeline_spark.operators.raster import decode_geotiff_bytes
 
     rng = np.random.default_rng(20220606)
@@ -142,10 +176,9 @@ def test_raster_decode_falls_back_to_general_codec():
 
 def test_int32_without_sampleformat_not_misread_as_float():
     """A 32-bit integer TIFF may legally OMIT SampleFormat (optional
-    tag, spec default 1 = unsigned int). The raster fast path must not
-    default the absent tag to 3 (float) — that would satisfy its
-    bits==32/sfmt==3 guard and reinterpret the integer payload as
-    '<f4' garbage instead of falling through to the general codec."""
+    tag, spec default 1 = unsigned int). decode_geotiff_bytes must not
+    default the absent tag to 3 (float) — that would reinterpret the
+    integer payload as '<f4' garbage."""
     import struct
 
     from ndvi_etl_pipeline_spark.operators.raster import decode_geotiff_bytes
@@ -154,7 +187,7 @@ def test_int32_without_sampleformat_not_misread_as_float():
     a = rng.integers(0, 2**31 - 1, size=(19, 13), dtype=np.uint32)
     blob = bytearray(TF.write_tiff(a, compression="none"))
     # surgically drop the SampleFormat (339) entry: overwrite its code
-    # with an unknown private tag both decoders skip
+    # with an unknown private tag the decoder skips
     ifd_off = struct.unpack_from("<I", blob, 4)[0]
     n = struct.unpack_from("<H", blob, ifd_off)[0]
     hit = False
@@ -225,9 +258,9 @@ def test_bigtiff_roundtrip_with_overview(big_endian):
     assert levels[1][1].get("subfile_type") == 1
 
 
-def test_bigtiff_through_raster_scan_fallback():
-    """decode_geotiff_bytes must route BigTIFF through the general
-    codec (the fast path only reads classic II*\\0)."""
+def test_raster_decode_reads_bigtiff():
+    """decode_geotiff_bytes reads BigTIFF (version 43) band files, not
+    only classic TIFF."""
     from ndvi_etl_pipeline_spark.operators.raster import decode_geotiff_bytes
 
     rng = np.random.default_rng(4)
